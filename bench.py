@@ -122,8 +122,8 @@ def _replay_once(
     stats = _spark_submit(
         master,
         ["--changelog", log, "--target", tgt,
-         "--slice-size", str((events + SLICES - 1) // SLICES),
-         "--target-mode", "mor"] + (extra_args or []),
+         "--slice-size", str((events + SLICES - 1) // SLICES)]
+        + (extra_args or []),
         conf=conf,
     )
     shutil.rmtree(tgt, ignore_errors=True)
@@ -367,7 +367,7 @@ def main() -> None:
                     )
                 except Exception as rexc:  # noqa: BLE001 — keep planned draws
                     retry_error = str(rexc)[:500]
-                    orphan_n_leg = _fence_orphan(legs_n, legs_4n)
+                    orphan_n_leg = _fence_orphan(legs_n=legs_n, legs_4n=legs_4n)
                     break
                 draws.append(_bracket_draw(legs_4n, legs_n, i))
             best_pair = max(draws, key=lambda d: d["efficiency"])

@@ -26,10 +26,15 @@ Scale notes (the 100 TB story):
 * the target side of the merge is hash-clustered on the key at write
   time (bucket emulation) — with real Iceberg bucket partitioning +
   storage-partitioned joins that side never shuffles either;
-* merge is copy-on-write here (full rewrite per slice — fine for the
-  emulation); at 10^10 events the Iceberg backend flips to
-  merge-on-read (positional deletes) with periodic compaction, with no
-  change above this layer.
+* the merge is merge-on-read: each slice appends one O(slice) delta
+  and compaction folds deltas into the base every ``compact_threshold``
+  commits — the shape the Iceberg backend takes at 10^10 events
+  (positional deletes + periodic compaction), with no change above this
+  layer.
+
+The per-batch apply core (:func:`apply_changes`: count → dedup → op
+counters → MERGE) is shared with the Structured Streaming variant
+(``streaming.stream_runner``), so the two ingest paths cannot drift.
 
 Kill/resume: stop after any slice (or kill -9 mid-merge) and re-invoke —
 the resume point is read from the last committed snapshot, and an
@@ -41,7 +46,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from etl_reconciliate_spark.operators.dedup import dedup_max_lsn, dedup_max_lsn_agg
 from etl_reconciliate_spark.plans.checkpoint import CheckpointManager
@@ -65,7 +70,6 @@ def replay(
     max_slices: int | None = None,
     collect_lineage: bool = True,
     expire_keep: int = 2,
-    target_mode: str = "cow",
     compact_threshold: int = 8,
     dedup_impl: str = "agg",
 ) -> dict:
@@ -85,8 +89,8 @@ def replay(
     try:
         return _replay_loop(
             spark, changelog_path, target_path, slice_size, n_partitions,
-            max_slices, collect_lineage, expire_keep, target_mode,
-            compact_threshold, dedup_impl,
+            max_slices, collect_lineage, expire_keep, compact_threshold,
+            dedup_impl,
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
@@ -101,7 +105,6 @@ def _replay_loop(
     max_slices: int | None,
     collect_lineage: bool,
     expire_keep: int,
-    target_mode: str,
     compact_threshold: int,
     dedup_impl: str,
 ) -> dict:
@@ -112,7 +115,6 @@ def _replay_loop(
         spark,
         target_path,
         n_buckets=n_partitions,
-        mode=target_mode,
         compact_threshold=compact_threshold,
     )
 
@@ -138,10 +140,9 @@ def _replay_loop(
         # LSN-gap fast path (r5 review): real WAL/Debezium LSNs are
         # sparse byte offsets, so densely-tiled slices routinely cover
         # pure gaps. The driver-side footer index PROVES such a slice
-        # empty — merging it anyway cost a full-table rewrite per gap
-        # slice in cow mode and an empty delta (counting toward the
-        # compaction threshold → a full base rewrite every Nth gap) in
-        # mor. Skip the merge entirely: zero Spark jobs. The offset is
+        # empty — merging it anyway cost an empty delta (counting toward
+        # the compaction threshold → a full base rewrite every Nth gap).
+        # Skip the merge entirely: zero Spark jobs. The offset is
         # NOT advanced per gap — the next non-empty slice's commit
         # carries lsn_hi past the gap; a TRAILING run of gaps gets ONE
         # offsets-only commit after the loop (r5 final review: with
@@ -156,33 +157,14 @@ def _replay_loop(
             )
             continue
         trailing_gap_hi = -1
-        raw = source.read_slice(lo, hi)
-        # Per-file lineage comes from the footer index (driver-side
-        # metadata, built once at open); the exact event count and the
-        # I/U/D counters ride along with the merge's own write action
-        # via Observation. Net: exactly ONE Spark job per slice.
+        # per-file lineage comes from the footer index (driver-side
+        # metadata, built once at open); the event and op counts ride
+        # along with the merge's write — exactly ONE Spark job per slice
         lineage = overlap if collect_lineage else []
-        raw, obs_raw = observe_count(raw)
-        if dedup_impl == "agg":
-            # max_by aggregate: map-side partial combine collapses
-            # duplicates pre-shuffle; its exchange hash-partitions by the
-            # merge keys, so no explicit repartition node is needed — but
-            # the exchange's width comes from the SESSION shuffle
-            # partitions, which replay() pins to n_partitions below so
-            # the --partitions knob governs this (the heaviest) stage in
-            # BOTH dedup impls.
-            deduped = dedup_max_lsn_agg(raw)
-        else:
-            deduped = dedup_max_lsn(raw.repartition(n_partitions, *KEY_COLS))
-        obs = None
-        if collect_lineage:
-            deduped, obs = observe_ops(deduped)
-        stats = table.merge_apply(deduped, ckpt.offsets_for(hi, lineage))
-        # observed_or tolerates the (now rare — the footer-index gap
-        # skip above catches provable emptiness first) empty-plan case
-        # where AQE eliminated the CollectMetrics nodes
-        n_events = observed_or(obs_raw, ("n",))["n"]
-        ops = observed_or(obs, ("I", "U", "D")) if obs is not None else {}
+        stats, n_events, ops = apply_changes(
+            table, source.read_slice(lo, hi), ckpt.offsets_for(hi, lineage),
+            n_partitions, dedup_impl,
+        )
         events += n_events
         ckpt.append_manifest(
             {
@@ -218,10 +200,6 @@ def _replay_loop(
             table.expire_snapshots(keep_last=expire_keep)
 
     secs = time.monotonic() - t0
-    # the table is unconditionally initialized above, so exists() is
-    # true here; read mode() once (r5 review: three dead exists()
-    # branches, three metadata re-reads)
-    mode = table.mode()
     return {
         "slices": len(slices),
         "events": events,
@@ -229,9 +207,38 @@ def _replay_loop(
         "events_per_sec": events / secs if secs > 0 else float("inf"),
         "final_lsn": ckpt.last_committed_lsn(),
         "target_rows": table.count_live(),
-        "mode": mode,
-        # mode is fixed at init: warn when a pre-existing table silently
-        # overrides the requested --target-mode (a cow-vs-mor comparison
-        # on a reused path would otherwise measure one mode twice)
-        **({"requested_mode_ignored": target_mode} if mode != target_mode else {}),
+        "mode": "mor",
     }
+
+
+def apply_changes(
+    table: TargetTable,
+    raw: DataFrame,
+    offsets: dict,
+    n_partitions: int,
+    dedup_impl: str = "agg",
+) -> tuple[dict, int, dict]:
+    """Apply one batch of raw change events: count them, max-LSN dedup
+    per key, count the winners' I/U/D ops, MERGE with ``offsets``.
+
+    The counters ride along with the merge's own write action via
+    ``Observation``, so a non-empty batch costs exactly ONE Spark job.
+    Returns ``(merge stats, events, {"I": .., "U": .., "D": ..})``."""
+    raw, obs_raw = observe_count(raw)
+    if dedup_impl == "agg":
+        # max_by aggregate: map-side partial combine collapses
+        # duplicates pre-shuffle; its exchange hash-partitions by the
+        # merge keys, so no explicit repartition node is needed — but
+        # the exchange's width comes from the SESSION shuffle
+        # partitions, which both callers pin to n_partitions so the
+        # --partitions knob governs this (the heaviest) stage in BOTH
+        # dedup impls.
+        deduped = dedup_max_lsn_agg(raw)
+    else:
+        deduped = dedup_max_lsn(raw.repartition(n_partitions, *KEY_COLS))
+    deduped, obs_ops = observe_ops(deduped)
+    stats = table.merge_apply(deduped, offsets)
+    # observed_or tolerates the empty-plan case where AQE eliminated
+    # the CollectMetrics nodes
+    n_events = observed_or(obs_raw, ("n",))["n"]
+    return stats, n_events, observed_or(obs_ops, ("I", "U", "D"))

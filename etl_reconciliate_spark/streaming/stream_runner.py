@@ -5,8 +5,11 @@ slices from the engine's own offset store — that is what gives
 schema-per-epoch reads and LSN-aligned commits. This module is the
 same pipeline on Spark's native streaming engine for deployments that
 want it: ``readStream`` file source over the change-log directory →
-``foreachBatch`` (max-LSN dedup → key repartition → MERGE apply) →
-Spark's checkpointLocation for source offsets.
+``foreachBatch`` → Spark's checkpointLocation for source offsets. Each
+micro-batch goes through the bounded runner's own apply core
+(``streaming.runner.apply_changes``: event count → ``max_by`` max-LSN
+dedup with its map-side combine → I/U/D counters → MERGE), so the two
+ingest paths share one dedup and one set of counters.
 
 Correctness under arbitrary file-discovery order: each micro-batch is
 deduped per key (max LSN within the batch) and ``merge_apply`` keeps a
@@ -32,8 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from etl_reconciliate_spark.operators.dedup import dedup_max_lsn
-from etl_reconciliate_spark.schemas import CHANGELOG_SCHEMA, KEY_COLS
+from etl_reconciliate_spark.schemas import CHANGELOG_SCHEMA
+from etl_reconciliate_spark.streaming.runner import apply_changes
 from etl_reconciliate_spark.target.table import TargetTable
 
 
@@ -44,14 +47,15 @@ def replay_stream(
     checkpoint_dir: str,
     n_partitions: int | None = None,
     max_files_per_trigger: int | None = None,
-    target_mode: str = "mor",
     compact_threshold: int = 8,
     dedup_within_watermark: str | None = None,
     changelog_format: str = "parquet",
 ) -> dict:
     """Process the change-log backlog as a stream (availableNow trigger:
     drain everything discoverable, then stop). Resumable/idempotent via
-    ``checkpoint_dir`` + merge idempotence. Returns run stats.
+    ``checkpoint_dir`` + merge idempotence. Returns run stats, with
+    each applied micro-batch's event count and I/U/D ops in
+    ``per_batch``.
 
     ``dedup_within_watermark`` (e.g. ``"10 minutes"``) inserts a native
     ``dropDuplicatesWithinWatermark(["lsn"])`` stage: re-delivered
@@ -72,16 +76,15 @@ def replay_stream(
     inline note at the dedup stage."""
     prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions", "32")
     n_partitions = n_partitions or int(prior_shuffle)
-    # pin the session shuffle width so --partitions governs the merge
-    # join and the mor read-time window too, not only the explicit
-    # repartition (r5 review — same pin/restore replay() has); restored
-    # on exit for embedding sessions
+    # pin the session shuffle width so --partitions governs the dedup
+    # exchange and the read-time window (r5 review — same pin/restore
+    # replay() has); restored on exit for embedding sessions
     spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
     try:
         return _replay_stream_impl(
             spark, changelog_path, target_path, checkpoint_dir,
-            n_partitions, max_files_per_trigger, target_mode,
-            compact_threshold, dedup_within_watermark, changelog_format,
+            n_partitions, max_files_per_trigger, compact_threshold,
+            dedup_within_watermark, changelog_format,
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
@@ -94,12 +97,11 @@ def _replay_stream_impl(
     checkpoint_dir: str,
     n_partitions: int,
     max_files_per_trigger: int | None,
-    target_mode: str,
     compact_threshold: int,
     dedup_within_watermark: str | None,
     changelog_format: str,
 ) -> dict:
-    from pyspark.sql import Observation, functions as F
+    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     # ordered_commits=False: the file source discovers files in mtime
@@ -112,7 +114,6 @@ def _replay_stream_impl(
         spark,
         target_path,
         n_buckets=n_partitions,
-        mode=target_mode,
         compact_threshold=compact_threshold,
         ordered_commits=False,
     )
@@ -177,21 +178,15 @@ def _replay_stream_impl(
         # stage makes Spark run a trailing empty batch after the
         # watermark advances, and a checkpoint-restart can replay an
         # empty batch with dedup off — in both cases committing an empty
-        # version is wasted work, and on an EMPTY plan AQE eliminates
-        # the CollectMetrics node so the unguarded `obs.get` below would
-        # crash the stream (same failure the compaction path hit).
+        # version is wasted work.
         if batch_df.isEmpty():
             return
-        obs = Observation()
-        batch_df = batch_df.observe(obs, F.count(F.lit(1)).alias("n"))
-        deduped = dedup_max_lsn(batch_df.repartition(n_partitions, *KEY_COLS))
-        stats = table.merge_apply(deduped, {"stream_batch_id": batch_id})
+        stats, n_events, ops = apply_changes(
+            table, batch_df, {"stream_batch_id": batch_id}, n_partitions
+        )
         batches.append(
-            {
-                "batch_id": batch_id,
-                "version": stats["version"],
-                "input_rows": int(obs.get["n"] or 0),
-            }
+            {"batch_id": batch_id, "version": stats["version"],
+             "input_rows": n_events, "ops": ops}
         )
 
     q = (
@@ -205,5 +200,5 @@ def _replay_stream_impl(
         "batches": len(batches),
         "input_rows": sum(b["input_rows"] for b in batches),
         "target_rows": table.count_live(),
-        "mode": table.mode(),
+        "per_batch": batches,
     }

@@ -165,18 +165,14 @@ def _claim_is_current(claim_fd: int, mp: str) -> bool:
 class TargetTable:
     """A versioned, MERGE-able table rooted at ``path``.
 
-    Two write modes, chosen at ``init`` and recorded in the table
-    metadata (mirroring Iceberg's ``write.merge.mode``):
-
-    * ``cow`` (copy-on-write): every MERGE rewrites the full table into
-      a new snapshot — cheapest reads, O(table) write amplification per
-      slice. Right for small targets / infrequent batches.
-    * ``mor`` (merge-on-read): every MERGE appends only the deduplicated
-      change batch as a hash-clustered **delta** file set; readers
-      resolve the per-key max-``_lsn`` winner across base+deltas at scan
-      time. Write cost is O(slice) regardless of table size — the only
-      viable shape at 10^10 events — with automatic compaction folding
-      deltas back into the base every ``compact_threshold`` commits.
+    Merge-on-read (Iceberg's ``write.merge.mode=merge-on-read``): every
+    MERGE appends only the deduplicated change batch as a hash-clustered
+    **delta** file set; readers resolve the per-key max-``_lsn`` winner
+    across base+deltas at scan time. Write cost is O(slice) regardless
+    of table size — the only viable shape at 10^10 events — and
+    compaction folds deltas back into the base every
+    ``compact_threshold`` commits (``compact_threshold=1`` keeps the
+    table compacted after every commit).
 
     Tombstones (``_deleted``) are kept in deltas so the read-time winner
     selection sees the delete's LSN high-water mark. Whether compaction
@@ -215,7 +211,6 @@ class TargetTable:
         spark: SparkSession,
         path: str,
         n_buckets: int = 32,
-        mode: str = "cow",
         compact_threshold: int = 8,
         ordered_commits: bool = True,
         claim_grace_secs: float = 60.0,
@@ -225,15 +220,11 @@ class TargetTable:
         self.path = path
         self._n_buckets_arg = n_buckets
         self._n_buckets_cache: int | None = None
-        self._init_mode = mode
         self.compact_threshold = compact_threshold
         self._ordered_commits_arg = ordered_commits
         self._ordered_commits_cache: bool | None = None
         self.claim_grace_secs = claim_grace_secs
         self.orphan_grace_secs = orphan_grace_secs
-
-    def mode(self) -> str:
-        return self.metadata().get("mode", "cow")
 
     @property
     def ordered_commits(self) -> bool:
@@ -331,10 +322,7 @@ class TargetTable:
         self.spark.createDataFrame([], schema=full).write.mode("overwrite").parquet(
             os.path.join(self.path, data_dir)
         )
-        self._commit(
-            0, schema, data_dir, offsets or {}, row_count=0, parent=None,
-            mode=self._init_mode, deltas=[],
-        )
+        self._commit(0, schema, data_dir, offsets or {}, row_count=0, parent=None)
 
     # ------------------------------------------------------------- read
     def _read_padded(self, data_dir: str, want: T.StructType) -> DataFrame:
@@ -349,7 +337,7 @@ class TargetTable:
     def read(self, include_meta: bool = False, version: int | None = None) -> DataFrame:
         """Current (or pinned-version) table contents.
 
-        Live rows only unless ``include_meta``. In ``mor`` mode the
+        Live rows only unless ``include_meta``. With deltas pending the
         per-key max-``_lsn`` winner is resolved across base + deltas at
         scan time (one window over a key-hash shuffle — the read-side
         cost MoR trades for O(slice) writes)."""
@@ -504,16 +492,16 @@ class TargetTable:
 
         Scale shape — two plans, picked from the metadata alone:
 
-        * **delta fast path** (``mor`` and no compaction/base rewrite in
+        * **delta fast path** (no compaction/base rewrite in
           ``(from, to]``, detected as data_dir unchanged + delta-list
           prefix): scans ONLY the delta dirs committed in the range,
           winner-resolves them (one window over the key shuffle,
           O(range deltas)), and probes the from-snapshot once with a
           join to classify insert-vs-update and drop stale replays —
           output and shuffle cost are O(changed keys), never O(table).
-        * **snapshot diff fallback** (cow, or the range crosses a
-          compaction): full-outer join of the two resolved states on the
-          key — correct for ANY pair of retained versions.
+        * **snapshot diff fallback** (the range crosses a compaction):
+          full-outer join of the two resolved states on the key —
+          correct for ANY pair of retained versions.
 
         Both versions' metadata must still be retained
         (``expire_snapshots`` removes old versions); otherwise raises
@@ -560,7 +548,6 @@ class TargetTable:
             to_deltas[len(from_deltas):]
             if (
                 not _force_diff
-                and m_to["mode"] == "mor"
                 and m_to["data_dir"] == m_from["data_dir"]
                 and to_deltas[: len(from_deltas)] == from_deltas
             )
@@ -707,7 +694,6 @@ class TargetTable:
                     offsets,
                     row_count=meta.get("row_count"),
                     parent=meta["version"],
-                    mode=meta.get("mode", "cow"),
                     deltas=meta.get("deltas", []),
                 )
                 return {"version": meta["version"] + 1,
@@ -788,88 +774,12 @@ class TargetTable:
             + [T.StructField(f_.name, f_.dataType, True) for f_ in new_fields]
         )
 
-        if base_meta.get("mode", "cow") == "mor":
-            return self._merge_mor(batch, evolved, offsets, base_meta)
-
-        # read pinned to the SAME snapshot the commit slot is derived from
-        tgt = self.read(include_meta=True, version=base_meta["version"])
-        # pad missing columns and cast widened ones (both the stored side
-        # and an old-epoch batch may be narrower than the evolved schema)
-        tgt = _conform(tgt, evolved)
-        src = _conform(batch, evolved)
-
-        payload_cols = [f_.name for f_ in evolved.fields if f_.name not in KEY_COLS]
-
-        t = tgt.alias("t")
-        s = src.alias("s")
-        cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in KEY_COLS]
-        joined = t.join(s, cond, "full_outer")
-
-        take_src = F.col("s.lsn").isNotNull() & (
-            F.col(f"t.{META_LSN}").isNull() | (F.col("s.lsn") > F.col(f"t.{META_LSN}"))
-        )
-        out_cols = [
-            F.coalesce(F.col(f"s.{k}"), F.col(f"t.{k}")).alias(k) for k in KEY_COLS
-        ]
-        out_cols += [
-            F.when(take_src, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-            for c in payload_cols
-        ]
-        out_cols += [
-            F.when(take_src, F.col("s.lsn"))
-            .otherwise(F.col(f"t.{META_LSN}"))
-            .alias(META_LSN),
-            F.when(take_src, F.col("s.op") == F.lit("D"))
-            .otherwise(F.coalesce(F.col(f"t.{META_DELETED}"), F.lit(False)))
-            .alias(META_DELETED),
-        ]
-        merged = joined.select(out_cols)
-
-        version = base_meta["version"] + 1
-        data_dir = f"snap-{version:06d}-{uuid.uuid4().hex[:8]}"
-        out_path = os.path.join(self.path, data_dir)
-        # Hash-cluster files on the key (emulating Iceberg bucket
-        # partitioning) so downstream reads are co-located.
-        # Live-row count rides the write via Observation (no extra job);
-        # row_count in metadata is LIVE rows (tombstones excluded), the
-        # same semantic as a MoR compaction commit.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        merged = merged.observe(
-            obs,
-            F.sum(
-                F.when(~F.coalesce(F.col(META_DELETED), F.lit(False)), 1).otherwise(0)
-            ).alias("live"),
-        )
-        merged.repartition(self.n_buckets, *KEY_COLS).write.option(
-            "compression", PARQUET_CODEC
-        ).mode("overwrite").parquet(
-            out_path
-        )
-        # _observed_live: AQE can eliminate the CollectMetrics node on an
-        # empty plan (the failure compact() and stream_runner hit) — the
-        # helper falls back to counting the written files
-        row_count = self._observed_live(obs, out_path)
-        self._commit(
-            version, evolved, data_dir, offsets,
-            row_count=row_count, parent=version - 1,
-            mode="cow", deltas=[],
-        )
-        return {"version": version, "row_count": row_count, "data_dir": data_dir}
-
-    def _merge_mor(
-        self, batch: DataFrame, evolved: T.StructType, offsets: dict,
-        meta: dict,
-    ) -> dict:
-        """Merge-on-read apply: append the deduped batch as a delta file
-        set (hash-clustered on the key, like the base); O(slice) write
-        cost regardless of table size. Winner resolution happens at read
-        time; compaction folds deltas into the base every
-        ``compact_threshold`` commits. ``meta`` is the SAME metadata
-        snapshot the caller derived the schema from — the commit slot is
-        meta["version"]+1 so a racing writer conflicts instead of having
-        its delta silently dropped from the list (r4 core review)."""
+        # merge-on-read: append the batch as a delta file set
+        # (hash-clustered on the key, like the base) — O(slice) write
+        # cost regardless of table size. Winner resolution happens at
+        # read time. The commit slot is base_meta["version"]+1, so a
+        # racing writer conflicts instead of having its delta silently
+        # dropped from the list (r4 core review).
         src = _conform(batch, evolved)
         delta_rows = (
             src.select(
@@ -878,19 +788,18 @@ class TargetTable:
                 (F.col("op") == F.lit("D")).alias(META_DELETED),
             )
         )
-        version = meta["version"] + 1
+        version = base_meta["version"] + 1
         delta_dir = f"delta-{version:06d}-{uuid.uuid4().hex[:8]}"
         out_path = os.path.join(self.path, delta_dir)
         delta_rows.repartition(self.n_buckets, *KEY_COLS).write.option(
             "compression", PARQUET_CODEC
         ).mode("overwrite").parquet(out_path)
-        deltas = meta.get("deltas", []) + [delta_dir]
+        deltas = base_meta.get("deltas", []) + [delta_dir]
         self._commit(
-            version, evolved, meta["data_dir"], offsets,
-            row_count=None, parent=version - 1,
-            mode="mor", deltas=deltas,
+            version, evolved, base_meta["data_dir"], offsets,
+            row_count=None, parent=version - 1, deltas=deltas,
         )
-        stats = {"version": version, "row_count": None, "data_dir": meta["data_dir"],
+        stats = {"version": version, "row_count": None, "data_dir": base_meta["data_dir"],
                  "n_deltas": len(deltas)}
         if len(deltas) >= self.compact_threshold:
             try:
@@ -906,11 +815,8 @@ class TargetTable:
         drop_tombstones: bool | None = None,
         allow_unordered_drop: bool = False,
     ) -> dict:
-        """Fold all deltas into a new base snapshot (MoR maintenance);
-        on a cow table, act as the tombstone VACUUM (full sorted rewrite
-        dropping ``_deleted`` rows — without it a delete-heavy cow table
-        carries its dead rows into every subsequent full rewrite
-        forever).
+        """Fold all deltas into a new base snapshot (MoR maintenance),
+        dropping ``_deleted`` rows on the way when ``drop_tombstones``.
 
         ``drop_tombstones`` defaults to ``self.ordered_commits``:
         dropping a tombstone is only safe when nothing older than it can
@@ -923,7 +829,7 @@ class TargetTable:
         pass ``allow_unordered_drop=True`` only when the out-of-order
         source is decommissioned and no stale delivery can ever arrive.
 
-        An explicit ``drop_tombstones=True`` on a MoR table with zero
+        An explicit ``drop_tombstones=True`` on a table with zero
         pending deltas still rewrites the base (the vacuum request —
         base-resident tombstones have no other exit); the no-delta
         early-return applies only to the implicit maintenance call."""
@@ -939,16 +845,7 @@ class TargetTable:
                 "decommissioned."
             )
         meta = self.metadata()
-        table_mode = meta.get("mode", "cow")
-        if table_mode == "mor" and not meta.get("deltas") and not explicit_drop:
-            return {"version": meta["version"], "row_count": meta.get("row_count"),
-                    "data_dir": meta["data_dir"], "n_deltas": 0}
-        if table_mode == "cow" and not drop_tombstones:
-            # nothing to fold on a cow table; the only compaction work
-            # is the tombstone vacuum (cow merges retain tombstones so
-            # each MERGE keeps the row-level replay guard — maintenance
-            # reclaims them under the same ordered-commits argument the
-            # MoR drop uses, r4 core review)
+        if not meta.get("deltas") and not explicit_drop:
             return {"version": meta["version"], "row_count": meta.get("row_count"),
                     "data_dir": meta["data_dir"], "n_deltas": 0}
         schema = T.StructType.fromJson(meta["schema"])
@@ -986,7 +883,6 @@ class TargetTable:
         self._commit(
             version, schema, data_dir, meta.get("offsets", {}),
             row_count=row_count, parent=version - 1,
-            mode=table_mode, deltas=[],
         )
         return {"version": version, "row_count": row_count, "data_dir": data_dir,
                 "n_deltas": 0}
@@ -1007,8 +903,8 @@ class TargetTable:
             ).count()
 
     def count_live(self) -> int:
-        """Exact live-row count (cheap in cow — committed metadata;
-        a winner-resolution scan in mor between compactions)."""
+        """Exact live-row count: committed metadata right after a
+        compaction, a winner-resolution scan while deltas are pending."""
         rc = self.metadata().get("row_count")
         if rc is None:
             return self.read().count()
@@ -1044,7 +940,6 @@ class TargetTable:
         offsets: dict,
         row_count: int | None,
         parent: int | None,
-        mode: str = "cow",
         deltas: list[str] | None = None,
     ) -> None:
         meta = {
@@ -1054,7 +949,9 @@ class TargetTable:
             "offsets": offsets,
             "row_count": row_count,
             "parent": parent,
-            "mode": mode,
+            # a constant: every table is merge-on-read; kept so engines
+            # that still read a write mode from metadata see the truth
+            "mode": "mor",
             "deltas": deltas or [],
             # recorded so READERS can bucket-prune (read_keys) without
             # having to be constructed with the writer's n_buckets

@@ -49,9 +49,10 @@ def main() -> int:
     # surface — without it an over-large benchmark frame OOMs executors
     # with no opt-out (r5 batch review)
     ap.add_argument("--no-broadcast-benchmark", action="store_true",
-                    help="shuffle-join the benchmark shingle set instead "
-                    "of broadcasting it — use when the benchmark corpus "
-                    "is too large for executor memory")
+                    help="partial opt-out (benchmark sizes stay "
+                    "broadcast): shuffle-join the benchmark shingle set "
+                    "instead of broadcasting it — use when the benchmark "
+                    "corpus is too large for executor memory")
     ap.add_argument("--budget-tokens", type=int, default=2048)
     ap.add_argument("--shards", type=int, default=64)
     ap.add_argument("--seed", type=int, default=7, help="split seed")

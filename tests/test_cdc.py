@@ -181,7 +181,7 @@ def test_replay_with_empty_slices(spark, tmp_path):
     p = str(tmp_path / "sparse_log")
     write_changelog(spark, df, p)
     tgt = str(tmp_path / "t")
-    stats = replay(spark, p, tgt, slice_size=5_000, target_mode="mor")
+    stats = replay(spark, p, tgt, slice_size=5_000)
     assert stats["slices"] > 20  # plenty of empty slices were planned
     assert stats["events"] == len(df)
     want = fold_changelog(df)
@@ -196,8 +196,7 @@ def test_replay_with_empty_slices(spark, tmp_path):
 def test_sparse_lsn_gap_slices_are_skipped(spark, tmp_path):
     """Real WAL/Debezium LSNs are sparse byte offsets: densely-tiled
     slices routinely cover pure gaps, and merging a provably-empty
-    slice cost a full-table rewrite (cow) / an empty delta counting
-    toward compaction (mor) per gap. The footer index proves emptiness
+    slice cost an empty delta counting toward compaction per gap. The footer index proves emptiness
     driver-side — those slices must be skipped with zero commits."""
     import datetime
 

@@ -92,7 +92,7 @@ def _index_docs(spark, idx_dir):
 
 
 def test_dedup_index_job_cycle(spark, tmp_path, capsys, monkeypatch):
-    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     tbl.init(SCHEMA)
     tbl.merge_apply(spark.createDataFrame([
         (1, "I", "c1", 0, "user", LONG, T0),
@@ -145,7 +145,7 @@ def test_dedup_index_job_pairs_out_and_orphan_sweep(
     orphaned data-v* dir a crash left behind."""
     import os
 
-    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     tbl.init(SCHEMA)
     tbl.merge_apply(spark.createDataFrame([
         (1, "I", "c1", 0, "user", LONG, T0),
@@ -177,7 +177,7 @@ def test_dedup_index_job_measure_version_mismatch_rebuilds(
     --refresh degrades to a full rebuild and restamps the version.
     Also covers the legacy int-stamped meta (pre-SIGNATURE_VERSION
     indexes carried TOKENIZER_VERSION): any non-equal stamp rebuilds."""
-    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     tbl.init(SCHEMA)
     tbl.merge_apply(spark.createDataFrame([
         (1, "I", "c1", 0, "user", LONG, T0),

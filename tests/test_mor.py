@@ -1,12 +1,11 @@
-"""Merge-on-read target mode: delta-append MERGE, read-time winner
-resolution, compaction, snapshot expiry with shared delta files, schema
-evolution — all vs the pandas fold oracle. Plus the distributed
-(mapInPandas) change-log generator's determinism and invariants.
+"""Merge-on-read target: delta-append MERGE, read-time winner
+resolution, compaction, snapshot expiry with shared delta files — all
+vs the pandas fold oracle. Plus the distributed (mapInPandas)
+change-log generator's determinism and invariants.
 
-MoR is the 10^10-event write path (SURVEY §7.4): copy-on-write rewrites
-the whole table per slice (O(slices × table)), MoR appends O(slice) and
-amortizes the fold into periodic compactions — the same trade Iceberg
-makes with ``write.merge.mode=merge-on-read``.
+MoR is the 10^10-event write path (SURVEY §7.4): it appends O(slice)
+per MERGE and amortizes the fold into periodic compactions — the same
+trade Iceberg makes with ``write.merge.mode=merge-on-read``.
 """
 
 import pandas as pd
@@ -58,7 +57,7 @@ def test_mor_replay_matches_oracle(spark, changelog_df, changelog_path, tmp_path
     tgt = str(tmp_path / "t")
     stats = replay(
         spark, changelog_path, tgt,
-        slice_size=3000, target_mode="mor", compact_threshold=100,
+        slice_size=3000, compact_threshold=100,
     )
     assert stats["mode"] == "mor"
     # no compaction happened: every commit was a pure delta append
@@ -72,7 +71,7 @@ def test_mor_compaction_folds_and_preserves_state(
     tgt = str(tmp_path / "t")
     replay(
         spark, changelog_path, tgt,
-        slice_size=3000, target_mode="mor", compact_threshold=2,
+        slice_size=3000, compact_threshold=2,
     )
     table = TargetTable(spark, tgt)
     # threshold 2 with 4 slices → compactions fired; final state identical
@@ -90,29 +89,14 @@ def test_mor_kill_resume_and_idempotence(spark, changelog_df, changelog_path, tm
     tgt = str(tmp_path / "t")
     s1 = replay(
         spark, changelog_path, tgt,
-        slice_size=2500, max_slices=2, target_mode="mor", compact_threshold=3,
+        slice_size=2500, max_slices=2, compact_threshold=3,
     )
     assert s1["slices"] == 2
-    s2 = replay(spark, changelog_path, tgt, slice_size=2500, target_mode="mor")
+    s2 = replay(spark, changelog_path, tgt, slice_size=2500)
     assert s1["events"] + s2["events"] == len(changelog_df)
     # replaying again applies nothing
-    s3 = replay(spark, changelog_path, tgt, slice_size=2500, target_mode="mor")
+    s3 = replay(spark, changelog_path, tgt, slice_size=2500)
     assert s3["slices"] == 0
-    assert_matches_oracle(spark, tgt, changelog_df)
-
-
-def test_mor_schema_evolution(spark, changelog_df, changelog_path, tmp_path):
-    epoch = tool_epoch_lsn(N)
-    tgt = str(tmp_path / "t")
-    replay(
-        spark, changelog_path, tgt,
-        slice_size=epoch, max_slices=1, target_mode="mor",
-    )
-    table = TargetTable(spark, tgt)
-    assert "tool" not in table.schema().fieldNames()
-    replay(spark, changelog_path, tgt, slice_size=N, target_mode="mor")
-    table = TargetTable(spark, tgt)
-    assert "tool" in table.schema().fieldNames()
     assert_matches_oracle(spark, tgt, changelog_df)
 
 
@@ -122,7 +106,7 @@ def test_mor_expire_keeps_shared_deltas(spark, changelog_df, changelog_path, tmp
     tgt = str(tmp_path / "t")
     replay(
         spark, changelog_path, tgt,
-        slice_size=3000, target_mode="mor", compact_threshold=100,
+        slice_size=3000, compact_threshold=100,
         expire_keep=0,  # keep all, then expire manually
     )
     table = TargetTable(spark, tgt)
@@ -195,7 +179,7 @@ def test_spark_datagen_replay_end_to_end(spark, tmp_path):
     log = str(tmp_path / "log")
     tgt = str(tmp_path / "t")
     write_changelog_spark(spark, log, 30_000, seed=8, block=8_000, text_len=64)
-    stats = replay(spark, log, tgt, slice_size=10_000, target_mode="mor",
+    stats = replay(spark, log, tgt, slice_size=10_000,
                    compact_threshold=2)
     pdf = gen_changelog_spark(spark, 30_000, seed=8, block=8_000, text_len=64).toPandas()
     want = fold_changelog(pdf)
@@ -226,7 +210,7 @@ def test_orphan_delta_invisible_and_cleaned(spark, changelog_df, changelog_path,
     import shutil as sh
 
     tgt = str(tmp_path / "t")
-    replay(spark, changelog_path, tgt, slice_size=N, target_mode="mor")
+    replay(spark, changelog_path, tgt, slice_size=N)
     table = TargetTable(spark, tgt)
     before = table.read().count()
 
@@ -255,7 +239,7 @@ def test_compaction_sorts_buckets_by_key(spark, tmp_path):
 
     from etl_reconciliate_spark.target.table import TargetTable
 
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor",
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2,
                     compact_threshold=100)
     t.init(T.StructType([
         T.StructField("conv_id", T.StringType()),

@@ -50,7 +50,7 @@ def _rollup_rows(spark, rollup_dir):
 
 
 def test_rollup_build_refresh_cycle(spark, tmp_path, capsys, monkeypatch):
-    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     tbl.init(SCHEMA)
     tbl.merge_apply(spark.createDataFrame([
         (1, "I", "c1", 0, "user", "one two three", _ts(0)),
@@ -94,7 +94,7 @@ def test_rollup_build_refresh_cycle(spark, tmp_path, capsys, monkeypatch):
 
 def test_rollup_refresh_grain_mismatch_rejected(spark, tmp_path, capsys,
                                                 monkeypatch):
-    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     tbl.init(SCHEMA)
     tbl.merge_apply(spark.createDataFrame(
         [(1, "I", "c1", 0, "user", "hello", _ts(0))], BATCH), {"lsn_hi": 1})
@@ -114,7 +114,7 @@ def test_rollup_refresh_expired_base_rebuilds(spark, tmp_path, capsys,
     """When expire_snapshots removed the rollup's recorded snapshot,
     --refresh degrades to a full rebuild with a JSON line, not a
     traceback (code-review r4)."""
-    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     tbl.init(SCHEMA)
     tbl.merge_apply(spark.createDataFrame(
         [(1, "I", "c1", 0, "user", "hello there", _ts(0))], BATCH),
@@ -146,7 +146,7 @@ def test_rollup_refresh_measure_version_mismatch_rebuilds(
     counts next to untouched old-tokenizer cells, breaking the
     refresh == rebuild guarantee. --refresh degrades to a full rebuild
     (r5 batch review)."""
-    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     tbl.init(SCHEMA)
     tbl.merge_apply(spark.createDataFrame(
         [(1, "I", "c1", 0, "user", "hello there", _ts(0))], BATCH),
@@ -181,7 +181,7 @@ def test_rollup_rebuild_cleans_previous_data_dir(spark, tmp_path, capsys,
     data-v{N} dir, not orphan it (code-review r4)."""
     import os
 
-    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    tbl = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     tbl.init(SCHEMA)
     tbl.merge_apply(spark.createDataFrame(
         [(1, "I", "c1", 0, "user", "hello", _ts(0))], BATCH), {"lsn_hi": 1})

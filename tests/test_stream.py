@@ -3,6 +3,8 @@ file-source readStream + foreachBatch merge must converge to the same
 final state as the bounded replay / pandas fold oracle, be idempotent
 across restarts, and pick up newly arriving files from the checkpoint."""
 
+import os
+
 import pandas as pd
 
 from etl_reconciliate_spark.datagen import (
@@ -40,10 +42,18 @@ def test_stream_backlog_drain_matches_oracle(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     stats = replay_stream(
         spark, log, tgt, ckpt,
-        max_files_per_trigger=8, target_mode="mor", compact_threshold=3,
+        max_files_per_trigger=8, compact_threshold=3,
     )
     assert stats["batches"] >= 2  # maxFilesPerTrigger forced multiple batches
     _assert_state(spark, tgt, df)
+    # each micro-batch ran the replay loop's apply core: it reports I/U/D
+    # ops, and they sum to its deduped winners — the rows of the one
+    # delta its MERGE appended (delta dirs sort by commit version)
+    deltas = sorted(d for d in os.listdir(tgt) if d.startswith("delta-"))
+    winners = [spark.read.parquet(os.path.join(tgt, d)).count() for d in deltas]
+    assert all(set(b["ops"]) == {"I", "U", "D"} for b in stats["per_batch"])
+    assert [sum(b["ops"].values()) for b in stats["per_batch"]] == winners
+    assert sum(b["input_rows"] for b in stats["per_batch"]) == len(df)
 
     # re-run on the same checkpoint: nothing new → no batches, state intact
     stats2 = replay_stream(spark, log, tgt, ckpt)
@@ -115,7 +125,7 @@ def test_stream_out_of_order_delete_not_resurrected(spark, tmp_path):
     # worst case — the tombstone is compacted before lsn 15 arrives
     stats = replay_stream(
         spark, log, str(tmp_path / "tbl"), str(tmp_path / "ckpt"),
-        max_files_per_trigger=1, target_mode="mor", compact_threshold=1,
+        max_files_per_trigger=1, compact_threshold=1,
     )
     assert stats["batches"] == 3
     assert TargetTable(spark, str(tmp_path / "tbl")).read().count() == 0

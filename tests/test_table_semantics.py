@@ -33,7 +33,7 @@ def _batch(spark, rows, with_tool=False):
 def test_time_travel_uses_pinned_schema(spark, tmp_path):
     """A version pinned BEFORE a schema evolution must not show the
     late-added column (round-1 verdict item 7)."""
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     t.merge_apply(_batch(spark, [(1, "I", "c1", 0, "hello")]), {"lsn_hi": 1})
     v_pre = t.current_version()
@@ -48,7 +48,7 @@ def test_time_travel_uses_pinned_schema(spark, tmp_path):
 
 
 def test_commit_conflict_and_stale_takeover(spark, tmp_path):
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     t.merge_apply(_batch(spark, [(1, "I", "c1", 0, "a")]), {"lsn_hi": 1})
 
@@ -70,7 +70,7 @@ def test_commit_conflict_and_stale_takeover(spark, tmp_path):
         nxt2 = nxt  # a second writer still targeting the published slot
         with pytest.raises(CommitConflictError):
             t2._commit(nxt2, SCHEMA, t2.metadata()["data_dir"], {},
-                       row_count=0, parent=nxt2 - 1, mode="mor", deltas=[])
+                       row_count=0, parent=nxt2 - 1, deltas=[])
     finally:
         pass
 
@@ -88,7 +88,7 @@ def test_merge_retry_after_conflict(spark, tmp_path):
     """A commit conflict from a racing writer is retried from fresh
     state inside merge_apply (r2 verdict item 8) — the first conflicted
     attempt's work is discarded and the retry lands on the next slot."""
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     t.merge_apply(_batch(spark, [(1, "I", "c1", 0, "a")]), {"lsn_hi": 1})
 
@@ -115,7 +115,7 @@ def test_merge_retry_with_real_interleaved_writer(spark, tmp_path):
     built-in retry must recompute from the fresh state — B's row
     visible — and land on the next slot with BOTH writers' rows."""
     path = str(tmp_path / "t")
-    a = TargetTable(spark, path, n_buckets=2, mode="mor")
+    a = TargetTable(spark, path, n_buckets=2)
     a.init(SCHEMA)
     a.merge_apply(_batch(spark, [(1, "I", "c1", 0, "base")]), {"lsn_hi": 1})
     b = TargetTable(spark, path, n_buckets=2)
@@ -151,7 +151,7 @@ def test_tombstone_retained_without_ordered_commits(spark, tmp_path):
     a deleted row. ordered_commits=False retains them; the deleted key
     must stay dead."""
     t = TargetTable(
-        spark, str(tmp_path / "t"), n_buckets=2, mode="mor",
+        spark, str(tmp_path / "t"), n_buckets=2,
         ordered_commits=False,
     )
     t.init(SCHEMA)
@@ -164,7 +164,7 @@ def test_tombstone_retained_without_ordered_commits(spark, tmp_path):
 
     # control: the ordered-commits default DROPS the tombstone, which is
     # exactly why it must not be used with an out-of-order writer
-    t2 = TargetTable(spark, str(tmp_path / "t2"), n_buckets=2, mode="mor")
+    t2 = TargetTable(spark, str(tmp_path / "t2"), n_buckets=2)
     t2.init(SCHEMA)
     t2.merge_apply(_batch(spark, [(10, "I", "c1", 0, "v10")]), {"b": 1})
     t2.merge_apply(_batch(spark, [(20, "D", "c1", 0, None)]), {"b": 2})
@@ -175,7 +175,7 @@ def test_tombstone_retained_without_ordered_commits(spark, tmp_path):
 
 def test_compact_retained_tombstone_row_count_is_live(spark, tmp_path):
     t = TargetTable(
-        spark, str(tmp_path / "t"), n_buckets=2, mode="mor",
+        spark, str(tmp_path / "t"), n_buckets=2,
         ordered_commits=False,
     )
     t.init(SCHEMA)
@@ -245,15 +245,22 @@ SCORE_SCHEMA = T.StructType(
 )
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_schema_widening_int_to_long(spark, tmp_path, mode):
+# The two table layouts a merge can leave behind: "cow" is the
+# copy-on-write state, compacted after every commit (compact_threshold=1,
+# deltas folded into the base at once); "mor" lets deltas accumulate.
+LAYOUTS = [pytest.param(1, id="cow"), pytest.param(8, id="mor")]
+
+
+@pytest.mark.parametrize("compact_threshold", LAYOUTS)
+def test_schema_widening_int_to_long(spark, tmp_path, compact_threshold):
     """A batch carrying a wider type (int -> long) widens the table
     schema; pre-widening data files are cast at read time; a later
     NARROWER batch (old epoch replay) is cast up without changing the
     schema; time travel to a pre-widening version keeps int."""
     from etl_reconciliate_spark.target.table import _wider  # noqa: F401
 
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode=mode)
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2,
+                    compact_threshold=compact_threshold)
     t.init(SCORE_SCHEMA)
     t.merge_apply(_score_batch(spark, [(1, "I", "c1", 0, 5)]), {"lsn_hi": 1})
     v_pre = t.current_version()
@@ -318,7 +325,7 @@ def test_read_keys_bucket_pruned_lookup(spark, tmp_path):
     fewer files: inputFiles() must show one file per (bucket, dir), not
     n_buckets per dir. Covers winners across deltas, tombstones, missing
     keys, and schema evolution padding."""
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=8, mode="mor",
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=8,
                     compact_threshold=99)
     t.init(SCHEMA)
     rows = [(i, "I", f"c{i % 10}", i // 10, f"v{i}") for i in range(40)]
@@ -364,7 +371,7 @@ def test_read_keys_bucket_pruned_lookup(spark, tmp_path):
 
 
 def test_read_keys_version_pinned_and_empty(spark, tmp_path):
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=4, mode="cow")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=4)
     t.init(SCHEMA)
     with pytest.raises(ValueError):
         t.read_keys([])
@@ -377,19 +384,23 @@ def test_read_keys_version_pinned_and_empty(spark, tmp_path):
     assert t.read_keys([("c1", 0)], version=v1).collect()[0]["text"] == "a"
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_merge_slot_pinned_to_read_snapshot(spark, tmp_path, mode):
+@pytest.mark.parametrize("compact_threshold", LAYOUTS)
+def test_merge_slot_pinned_to_read_snapshot(spark, tmp_path, compact_threshold):
     """The lost-update TOCTOU (r4 core review): writer B commits BETWEEN
     writer A's metadata read and A's commit. A's commit slot must derive
     from the snapshot A actually read — so A CONFLICTS and retries on
     top of B — not from the live pointer at commit time, which would let
-    A silently overwrite B (cow: B's rows dropped from the full
-    rewrite; mor: B's delta dropped from the delta list)."""
+    A silently overwrite B (B's delta dropped from the delta list, or
+    from the base B's compaction rewrote)."""
     path = str(tmp_path / "t")
-    a = TargetTable(spark, path, n_buckets=2, mode=mode)
+    a = TargetTable(spark, path, n_buckets=2,
+                    compact_threshold=compact_threshold)
     a.init(SCHEMA)
     a.merge_apply(_batch(spark, [(1, "I", "c1", 0, "base")]), {"lsn_hi": 1})
-    b = TargetTable(spark, path, n_buckets=2)
+    b = TargetTable(spark, path, n_buckets=2,
+                    compact_threshold=compact_threshold)
+    # commits per merge: the delta, plus its compaction when it fires
+    per_merge = 2 if compact_threshold == 1 else 1
 
     real_meta = a.metadata
     state = {"fired": False}
@@ -407,7 +418,8 @@ def test_merge_slot_pinned_to_read_snapshot(spark, tmp_path, mode):
     stats = a.merge_apply(
         _batch(spark, [(3, "I", "c3", 0, "from-a")]), {"lsn_hi": 3}
     )
-    assert stats["version"] == 3  # landed ON TOP of B, not instead of it
+    # landed ON TOP of B, not instead of it
+    assert stats["version"] == 3 * per_merge
     rows = {r["conv_id"]: r["text"] for r in a.read().collect()}
     assert rows == {"c1": "base", "c2": "from-b", "c3": "from-a"}
 
@@ -417,7 +429,7 @@ def test_claim_placeholder_not_a_published_version(spark, tmp_path):
     metadata: versions() must skip it, metadata() must surface
     not-found, and expire_snapshots must neither crash on it nor
     remove it (r4 core review)."""
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     for i in range(1, 4):
         t.merge_apply(_batch(spark, [(i, "I", f"c{i}", 0, "x")]), {"lsn_hi": i})
@@ -437,7 +449,7 @@ def test_n_buckets_is_a_table_property(spark, tmp_path):
     with another shuffle-partitions default must not break read_keys'
     bucket pruning (r4 core review)."""
     path = str(tmp_path / "t")
-    a = TargetTable(spark, path, n_buckets=2, mode="mor")
+    a = TargetTable(spark, path, n_buckets=2)
     a.init(SCHEMA)
     a.merge_apply(_batch(spark, [(1, "I", "c1", 0, "a")]), {"lsn_hi": 1})
 
@@ -449,12 +461,11 @@ def test_n_buckets_is_a_table_property(spark, tmp_path):
     assert got == {("c1", 0): "a", ("c9", 5): "late"}
 
 
-def test_cow_compact_vacuums_tombstones(spark, tmp_path):
-    """A delete-heavy cow table reclaims its tombstones through
-    compact() (the cow vacuum) — merges retain them for the row-level
-    replay guard, maintenance drops them under the ordered-commits
-    argument (r4 core review)."""
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="cow")
+def test_compact_vacuums_tombstones(spark, tmp_path):
+    """A delete-heavy table reclaims its tombstones through compact()
+    — merges retain them for the row-level replay guard, maintenance
+    drops them under the ordered-commits argument (r4 core review)."""
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     t.merge_apply(_batch(spark, [(1, "I", "c1", 0, "a"),
                                  (2, "I", "c2", 0, "b")]), {"lsn_hi": 2})
@@ -465,16 +476,6 @@ def test_cow_compact_vacuums_tombstones(spark, tmp_path):
     assert stats["row_count"] == 1
     assert t.read(include_meta=True).count() == 1  # tombstone reclaimed
     assert [r["conv_id"] for r in t.read().collect()] == ["c2"]
-    assert t.metadata()["mode"] == "cow"  # mode survives the vacuum
-
-    # out-of-order tables refuse the vacuum (no-op)
-    t2 = TargetTable(spark, str(tmp_path / "t2"), n_buckets=2, mode="cow",
-                     ordered_commits=False)
-    t2.init(SCHEMA)
-    t2.merge_apply(_batch(spark, [(1, "I", "c1", 0, "a")]), {"lsn_hi": 1})
-    v = t2.current_version()
-    t2.compact()
-    assert t2.current_version() == v
 
 
 def test_ordered_commits_is_a_table_property(spark, tmp_path):
@@ -484,7 +485,7 @@ def test_ordered_commits_is_a_table_property(spark, tmp_path):
     and let a later lower-LSN delivery resurrect the deleted row (r4
     review)."""
     path = str(tmp_path / "t")
-    t = TargetTable(spark, path, n_buckets=2, mode="mor",
+    t = TargetTable(spark, path, n_buckets=2,
                     ordered_commits=False)
     t.init(SCHEMA)
     t.merge_apply(_batch(spark, [(10, "I", "c1", 0, "v10")]), {"b": 1})
@@ -526,7 +527,7 @@ def test_compact_refuses_explicit_drop_on_unordered_table(spark, tmp_path):
     which also forces the zero-delta MoR base rewrite so base-resident
     tombstones have an exit."""
     t = TargetTable(
-        spark, str(tmp_path / "t"), n_buckets=2, mode="mor",
+        spark, str(tmp_path / "t"), n_buckets=2,
         ordered_commits=False,
     )
     t.init(SCHEMA)
@@ -559,7 +560,7 @@ def test_stale_writer_cannot_rewind_pointer(spark, tmp_path):
     expire_snapshots already deleted; the commit must still detect the
     published pointer is ahead and raise instead of REWINDING it
     (r5 review: a rewind silently discards every newer commit)."""
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     for i in range(4):
         t.merge_apply(
@@ -596,7 +597,7 @@ def test_expire_skips_sweep_when_kept_metadata_unreadable(spark, tmp_path, monke
     old `continue` let the orphan sweep delete the still-live shared
     MoR base/delta dirs. When no consistent read of the kept snapshots
     is possible, the sweep is skipped entirely."""
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     for i in range(4):
         t.merge_apply(
@@ -644,7 +645,7 @@ def test_stalled_creator_resume_preserves_takeover_publish(
     retry onto the next slot with B's metadata intact."""
     import etl_reconciliate_spark.target.table as tbl_mod
 
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     t.merge_apply(_batch(spark, [(1, "I", "c0", 0, "base")]), {"lsn_hi": 1})
     contested = t.current_version() + 1
@@ -698,7 +699,7 @@ def test_live_stalled_writer_cannot_be_taken_over(spark, tmp_path, monkeypatch):
     present, no clobber window at all."""
     import json as json_mod
 
-    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2, mode="mor")
+    t = TargetTable(spark, str(tmp_path / "t"), n_buckets=2)
     t.init(SCHEMA)
     t.merge_apply(_batch(spark, [(1, "I", "c0", 0, "base")]), {"lsn_hi": 1})
     contested = t.current_version() + 1
@@ -723,7 +724,7 @@ def test_live_stalled_writer_cannot_be_taken_over(spark, tmp_path, monkeypatch):
             b = TargetTable(spark, t.path, n_buckets=2)
             with pytest.raises(CommitConflictError, match="live writer"):
                 b._commit(contested, SCHEMA, b.metadata()["data_dir"], {},
-                          row_count=0, parent=contested - 1, mode="mor",
+                          row_count=0, parent=contested - 1,
                           deltas=list(b.metadata().get("deltas") or []))
         return real_dump(obj, fh, **kw)
 
@@ -761,7 +762,7 @@ def test_concurrent_writer_hammer_loses_nothing(spark, tmp_path):
     import threading
 
     path = str(tmp_path / "t")
-    t0 = TargetTable(spark, path, n_buckets=2, mode="mor",
+    t0 = TargetTable(spark, path, n_buckets=2,
                      compact_threshold=7)
     t0.init(SCHEMA)
 
