@@ -24,7 +24,11 @@ def footer_index(changelog_path: str) -> list[dict]:
     This is the 10^10-event design: lineage is table **metadata** (on a
     real cluster, the Iceberg manifest's per-file column stats — the same
     numbers), never a data scan. A 10 TB log has ~10^5 files → ~100 ms of
-    footer reads, instead of one extra executor job per slice."""
+    footer reads, instead of one extra executor job per slice.
+
+    Each entry also carries the file's Arrow ``schema``, which
+    ``ChangeLogSource`` turns into the Spark read schema of its epoch
+    without an inference job."""
     import pyarrow.parquet as pq
 
     out = []
@@ -64,6 +68,7 @@ def footer_index(changelog_path: str) -> list[dict]:
                     "rows": md.num_rows,
                     "lsn_lo": lo,
                     "lsn_hi": hi,
+                    "schema": pf.schema_arrow,
                 }
             )
     return out

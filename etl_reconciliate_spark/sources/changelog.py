@@ -11,14 +11,37 @@ O(new data) at 10^10-event scale.
 Schema evolution: early epoch files lack the ``tool`` column entirely.
 Each epoch dir is read with its own on-disk schema and aligned by name
 (missing columns → typed nulls), which is exactly how an Iceberg reader
-resolves old data files against a newer schema.
+resolves old data files against a newer schema. The on-disk schema
+comes from the parquet footers the lineage index already opened, so the
+open starts no schema-inference job.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+
+# where a Spark writer records its schema in the parquet key-value metadata
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(arrow_schema) -> T.StructType | None:
+    """The schema ``spark.read.parquet`` infers for a file, from its
+    footer: the schema a Spark writer embedded in the key-value metadata
+    when present (what Spark's own inference reads first), else the
+    Arrow mapping (timestamps without a zone are TIMESTAMP_NTZ, as Spark
+    reads them). None for a type the Arrow mapping cannot express."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    embedded = (arrow_schema.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if embedded is not None:
+        return T.StructType.fromJson(json.loads(embedded))
+    try:
+        return from_arrow_schema(arrow_schema, prefer_timestamp_ntz=True)
+    except TypeError:
+        return None
 
 
 class ChangeLogSource:
@@ -52,22 +75,19 @@ class ChangeLogSource:
             key=_epoch_key,
         ) or [""]
 
-        self._dfs = {
-            e: self.spark.read.parquet(os.path.join(self.path, e))
-            for e in self._epochs
-        }
-        # Per-file lineage index + per-epoch LSN bounds, all from parquet
-        # footers read driver-side (plans.metrics.footer_index) — zero
-        # Spark jobs at open. Bounds are used so a slice only exposes the
-        # columns of the epochs it touches — the reader must not
-        # fabricate a null `tool` column for pre-evolution slices.
+        # Per-file lineage index, per-epoch schemas and LSN bounds, all
+        # from parquet footers read driver-side
+        # (plans.metrics.footer_index) — zero Spark jobs at open. Bounds
+        # are used so a slice only exposes the columns of the epochs it
+        # touches — the reader must not fabricate a null `tool` column
+        # for pre-evolution slices.
         self.file_index = footer_index(path)
         self._bounds: dict[str, tuple[int, int]] = {}
+        arrow_schemas: dict[str, object] = {}
         for f_ in self.file_index:
-            if f_["lsn_lo"] is None:
-                continue  # empty file (footer_index backfills missing stats)
             e = f_["file"].rsplit("/", 1)[0]
-            if self._epochs != [""] and e not in self._epochs:
+            empty = f_["lsn_lo"] is None  # footer_index backfills missing stats
+            if not empty and self._epochs != [""] and e not in self._epochs:
                 # a data file outside the recognized epoch= dirs (stray
                 # top-level file, or nested one level deeper) would be
                 # invisible to the epoch DataFrames — its events silently
@@ -79,8 +99,19 @@ class ChangeLogSource:
                     f"or epoch=N subdirs only"
                 )
             e = e if e in self._epochs else ""
+            arrow_schemas.setdefault(e, f_["schema"])
+            if empty:
+                continue
             lo, hi = self._bounds.get(e, (f_["lsn_lo"], f_["lsn_hi"]))
             self._bounds[e] = (min(lo, f_["lsn_lo"]), max(hi, f_["lsn_hi"]))
+        self._dfs = {}
+        for e in self._epochs:
+            arrow = arrow_schemas.get(e)
+            schema = footer_schema(arrow) if arrow is not None else None
+            # no footer to take it from (an epoch without files) or an
+            # unmappable type: Spark's own inference, as before
+            reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+            self._dfs[e] = reader.parquet(os.path.join(self.path, e))
 
     def initial_schema(self):
         """Schema of the EARLIEST epoch (the pre-evolution shape) — the

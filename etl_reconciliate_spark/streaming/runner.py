@@ -159,7 +159,7 @@ def _replay_loop(
         trailing_gap_hi = -1
         # per-file lineage comes from the footer index (driver-side
         # metadata, built once at open); the event and op counts ride
-        # along with the merge's write — exactly ONE Spark job per slice
+        # along with the merge's write — no extra Spark job for either
         lineage = overlap if collect_lineage else []
         stats, n_events, ops = apply_changes(
             table, source.read_slice(lo, hi), ckpt.offsets_for(hi, lineage),
@@ -222,7 +222,9 @@ def apply_changes(
     per key, count the winners' I/U/D ops, MERGE with ``offsets``.
 
     The counters ride along with the merge's own write action via
-    ``Observation``, so a non-empty batch costs exactly ONE Spark job.
+    ``Observation``, so a non-empty batch costs one write action: under
+    AQE that is 2 Spark jobs (the dedup's map stage, then the write),
+    plus the compaction's when the merge triggers one.
     Returns ``(merge stats, events, {"I": .., "U": .., "D": ..})``."""
     raw, obs_raw = observe_count(raw)
     if dedup_impl == "agg":

@@ -31,11 +31,13 @@ emulation approximates this by hash-clustering data files on the key.
 
 from __future__ import annotations
 
+import contextlib
 import errno
 import glob
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 
@@ -101,13 +103,11 @@ def _conform(df: DataFrame, want: T.StructType) -> DataFrame:
     """Pad columns missing from ``df`` with typed nulls and cast columns
     whose type is narrower than ``want``'s (widening evolution).
 
-    ONE select, not a ``withColumn`` loop — this runs on every base and
-    delta dir of every read, and per-column ``withColumn`` stacks one
-    Project node per evolved column into every such subplan (pure
-    analyzer/optimizer tax on the hottest path — r5 review). Column
-    order and passthrough extras (the ``_lsn``/``_deleted`` meta cols)
-    are preserved exactly as the loop produced them: existing columns
-    in place, missing ``want`` columns appended."""
+    Used on an incoming merge batch; table files never need it — their
+    reads are pinned to the snapshot schema (see :func:`_with_meta`).
+    ONE select, not a ``withColumn`` loop (one Project node, not one per
+    evolved column). Column order and passthrough extras are preserved:
+    existing columns in place, missing ``want`` columns appended."""
     have = {f_.name: f_.dataType for f_ in df.schema.fields}
     want_types = {f_.name: f_.dataType for f_ in want.fields}
     cols = []
@@ -121,6 +121,57 @@ def _conform(df: DataFrame, want: T.StructType) -> DataFrame:
         if f_.name not in have:
             cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
     return df.select(cols)
+
+
+def _with_meta(schema: T.StructType) -> T.StructType:
+    """``schema`` plus the ``_lsn``/``_deleted`` meta columns: the pinned
+    read schema of a snapshot's data files.
+
+    Schema is table metadata (Iceberg's rule): every read names it, so
+    Spark starts no inference job, reads columns a file lacks as null
+    (add-column) and widens int→long / float→double from older files
+    (type promotion) on its own."""
+    return T.StructType(
+        list(schema.fields)
+        + [
+            T.StructField(META_LSN, T.LongType(), True),
+            T.StructField(META_DELETED, T.BooleanType(), True),
+        ]
+    )
+
+
+_COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
+_layout_lock = threading.Lock()
+_layout_pins: dict[int, list] = {}  # id(session) -> [holders, prior value]
+
+
+@contextlib.contextmanager
+def _bucket_layout(spark: SparkSession):
+    """Hold AQE partition coalescing off for a bucket-clustered write.
+
+    ``read_keys`` relies on ``part-NNNNN`` holding exactly bucket
+    ``pmod(hash(keys), n_buckets)``. When the input is already
+    hash-partitioned on the keys with the same count (the ``max_by``
+    dedup, the read window), Spark drops the explicit
+    ``repartition(n_buckets, *KEY_COLS)`` as redundant, and AQE would
+    then coalesce the remaining shuffle and put several buckets in one
+    file. Reference-counted per session so concurrent writers in one
+    process restore the prior value only when the last one leaves."""
+    key = id(spark)
+    with _layout_lock:
+        pin = _layout_pins.setdefault(key, [0, None])
+        if pin[0] == 0:
+            pin[1] = spark.conf.get(_COALESCE, "true")
+            spark.conf.set(_COALESCE, "false")
+        pin[0] += 1
+    try:
+        yield
+    finally:
+        with _layout_lock:
+            pin[0] -= 1
+            if pin[0] == 0:
+                spark.conf.set(_COALESCE, pin[1])
+                del _layout_pins[key]
 
 
 class CommitConflictError(RuntimeError):
@@ -309,58 +360,64 @@ class TargetTable:
 
     # ------------------------------------------------------------- init
     def init(self, schema: T.StructType, offsets: dict | None = None) -> None:
-        """Create version 0: an empty snapshot."""
-        os.makedirs(self.path, exist_ok=True)
-        full = T.StructType(
-            list(schema.fields)
-            + [
-                T.StructField(META_LSN, T.LongType(), True),
-                T.StructField(META_DELETED, T.BooleanType(), True),
-            ]
-        )
+        """Create version 0: an empty snapshot — an empty data dir, no
+        Spark job (every read pins the schema, so no file is needed to
+        carry it)."""
         data_dir = f"snap-{0:06d}"
-        self.spark.createDataFrame([], schema=full).write.mode("overwrite").parquet(
-            os.path.join(self.path, data_dir)
-        )
+        out_path = os.path.join(self.path, data_dir)
+        shutil.rmtree(out_path, ignore_errors=True)
+        os.makedirs(out_path)
         self._commit(0, schema, data_dir, offsets or {}, row_count=0, parent=None)
 
     # ------------------------------------------------------------- read
-    def _read_padded(self, data_dir: str, want: T.StructType) -> DataFrame:
-        """One data dir, padded to schema ``want`` (late-added columns
-        read as nulls, Iceberg-style) with meta columns last."""
-        df = self.spark.read.parquet(os.path.join(self.path, data_dir))
-        # _conform also casts files written before a widening promotion
-        # (int32 base files under an int64 evolved schema)
-        df = _conform(df, want)
-        return df.select([f_.name for f_ in want.fields] + META_COLS)
+    def _scan(self, want: T.StructType, names: list[str]) -> DataFrame:
+        """ONE parquet scan of table-relative dirs or files under the
+        pinned schema ``want`` + meta columns, in that column order.
+        Starts no Spark job before an action."""
+        return self.spark.read.schema(_with_meta(want)).parquet(
+            *[os.path.join(self.path, n) for n in names]
+        )
+
+    @staticmethod
+    def _winners(df: DataFrame) -> DataFrame:
+        """The per-key max-``_lsn`` row (one window over a key shuffle)."""
+        w = Window.partitionBy(*KEY_COLS).orderBy(F.col(META_LSN).desc())
+        return (
+            df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+
+    def _resolved(self, meta: dict, want: T.StructType) -> DataFrame:
+        """Snapshot ``meta``'s rows, tombstones included, one per key,
+        under schema ``want`` (which may be a LATER version's: old files
+        read with nulls for columns added since)."""
+        deltas = meta.get("deltas", [])
+        df = self._scan(want, [meta["data_dir"], *deltas])
+        return self._winners(df) if deltas else df
+
+    @staticmethod
+    def _present(df: DataFrame, want: T.StructType, include_meta: bool) -> DataFrame:
+        if include_meta:
+            return df
+        return df.filter(~F.coalesce(F.col(META_DELETED), F.lit(False))).select(
+            [f_.name for f_ in want.fields]
+        )
 
     def read(self, include_meta: bool = False, version: int | None = None) -> DataFrame:
         """Current (or pinned-version) table contents.
 
-        Live rows only unless ``include_meta``. With deltas pending the
-        per-key max-``_lsn`` winner is resolved across base + deltas at
-        scan time (one window over a key-hash shuffle — the read-side
-        cost MoR trades for O(slice) writes)."""
+        One schema-pinned scan of base + deltas under the snapshot's
+        recorded schema (no inference job; late-added columns read as
+        null, narrower old files widen). Live rows only unless
+        ``include_meta``. With deltas pending the per-key max-``_lsn``
+        winner is resolved at scan time (one window over a key-hash
+        shuffle — the read-side cost MoR trades for O(slice) writes)."""
         meta = self.metadata(version)
         # the PINNED version's schema — time-travel must not show columns
         # added after that snapshot (round-1 verdict item 7)
         want = T.StructType.fromJson(meta["schema"])
-        df = self._read_padded(meta["data_dir"], want)
-        deltas = meta.get("deltas", [])
-        if deltas:
-            for d in deltas:
-                df = df.unionByName(self._read_padded(d, want))
-            w = Window.partitionBy(*KEY_COLS).orderBy(F.col(META_LSN).desc())
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        if include_meta:
-            return df.select([f_.name for f_ in want.fields] + META_COLS)
-        return df.filter(~F.coalesce(F.col(META_DELETED), F.lit(False))).select(
-            [f_.name for f_ in want.fields]
-        )
+        return self._present(self._resolved(meta, want), want, include_meta)
 
     def read_keys(
         self,
@@ -375,12 +432,14 @@ class TargetTable:
         Every snapshot/delta dir is written with
         ``repartition(n_buckets, *KEY_COLS)`` — Spark's HashPartitioning
         places a row in partition ``pmod(murmur3(keys), n_buckets)`` and
-        the ``part-NNNNN-*`` file prefix IS that partition index. The
-        same function is available as a Column (``pmod(hash(...), n)``),
-        so the reader computes each key's bucket with a literal-only
-        one-row job (no scan) and opens one file per (bucket, dir)
-        instead of the whole table: O(dirs × distinct_buckets) files —
-        at 10^10 rows a point lookup touches ``1 + n_deltas`` files, not
+        the ``part-NNNNN-*`` file prefix IS that partition index (the
+        writes hold AQE coalescing off so it stays so; see
+        :func:`_bucket_layout`). The same function is available as a
+        Column (``pmod(hash(...), n)``), so the reader computes each
+        key's bucket with a literal-only one-row job (no scan) and opens
+        one file per (bucket, dir) in ONE schema-pinned scan instead of
+        the whole table: O(dirs × distinct_buckets) files — at 10^10
+        rows a point lookup touches ``1 + n_deltas`` files, not
         ``n_buckets × (1 + n_deltas)``. This is Iceberg's
         bucket-transform partition pruning, driven from the commit
         metadata (``n_buckets`` is recorded there by the writer).
@@ -415,55 +474,21 @@ class TargetTable:
                 cond = c if cond is None else cond & c
             key_filter = cond if key_filter is None else key_filter | cond
 
-        def _read_pruned(data_dir: str) -> DataFrame | None:
-            paths = []
-            # glob.escape the directory part: a table path containing
-            # glob metacharacters ('[', '?', '*') would otherwise match
-            # nothing and silently return empty lookups (r5 review)
-            base = glob.escape(os.path.join(self.path, data_dir))
-            for b in buckets:
-                paths.extend(
-                    glob.glob(os.path.join(base, f"part-{b:05d}-*.parquet"))
-                )
-            if not paths:
-                return None  # all matching buckets empty in this dir
-            df = _conform(self.spark.read.parquet(*paths), want)
-            return df.select(
-                [f_.name for f_ in want.fields] + META_COLS
-            ).filter(key_filter)
-
-        parts = [
-            p
-            for p in [_read_pruned(meta["data_dir"])]
-            + [_read_pruned(d) for d in meta.get("deltas", [])]
-            if p is not None
+        # root_dir, not a joined pattern: a table path containing glob
+        # metacharacters ('[', '?', '*') must not silently match nothing
+        files = [
+            os.path.join(d, name)
+            for d in [meta["data_dir"], *meta.get("deltas", [])]
+            for b in buckets
+            for name in sorted(glob.glob(
+                f"part-{b:05d}-*.parquet", root_dir=os.path.join(self.path, d)
+            ))
         ]
-        if not parts:
-            df = self.spark.createDataFrame(
-                [],
-                schema=T.StructType(
-                    list(want.fields)
-                    + [
-                        T.StructField(META_LSN, T.LongType(), True),
-                        T.StructField(META_DELETED, T.BooleanType(), True),
-                    ]
-                ),
-            )
+        if not files:  # every matching bucket is empty in every dir
+            df = self.spark.createDataFrame([], schema=_with_meta(want))
         else:
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            w = Window.partitionBy(*KEY_COLS).orderBy(F.col(META_LSN).desc())
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        if include_meta:
-            return df.select([f_.name for f_ in want.fields] + META_COLS)
-        return df.filter(~F.coalesce(F.col(META_DELETED), F.lit(False))).select(
-            [f_.name for f_ in want.fields]
-        )
+            df = self._winners(self._scan(want, files).filter(key_filter))
+        return self._present(df, want, include_meta)
 
     CHANGE_TYPE = "_change_type"
 
@@ -554,29 +579,15 @@ class TargetTable:
             else None
         )
 
-        def _pad_to_want(df: DataFrame) -> DataFrame:
-            return _conform(df, want).select(
-                [f_.name for f_ in want.fields] + META_COLS
-            )
-
         dead = lambda side: F.coalesce(  # noqa: E731 — local predicate
             F.col(f"{side}.{META_DELETED}"), F.lit(False)
         )
         if new_deltas is not None:
             if not new_deltas:
                 return self.read_changes(from_version, from_version)
-            delta = self._read_padded(new_deltas[0], want)
-            for d in new_deltas[1:]:
-                delta = delta.unionByName(self._read_padded(d, want))
-            w = Window.partitionBy(*KEY_COLS).orderBy(F.col(META_LSN).desc())
-            winner = (
-                delta.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-            prior = _pad_to_want(
-                self.read(include_meta=True, version=from_version)
-            )
+            winner = self._winners(self._scan(want, new_deltas))
+            # the from-snapshot's dirs scanned under the TO schema
+            prior = self._resolved(m_from, want)
             j = winner.alias("s").join(
                 prior.alias("t"),
                 [F.col(f"s.{k}").eqNullSafe(F.col(f"t.{k}")) for k in KEY_COLS],
@@ -606,8 +617,8 @@ class TargetTable:
             )
             return out.filter(F.col(self.CHANGE_TYPE).isNotNull()).select(out_fields)
 
-        fr = _pad_to_want(self.read(include_meta=True, version=from_version))
-        tt = _pad_to_want(self.read(include_meta=True, version=to_version))
+        fr = self._resolved(m_from, want)
+        tt = self._resolved(m_to, want)
         j = fr.alias("t").join(
             tt.alias("s"),
             [F.col(f"s.{k}").eqNullSafe(F.col(f"t.{k}")) for k in KEY_COLS],
@@ -791,9 +802,10 @@ class TargetTable:
         version = base_meta["version"] + 1
         delta_dir = f"delta-{version:06d}-{uuid.uuid4().hex[:8]}"
         out_path = os.path.join(self.path, delta_dir)
-        delta_rows.repartition(self.n_buckets, *KEY_COLS).write.option(
-            "compression", PARQUET_CODEC
-        ).mode("overwrite").parquet(out_path)
+        with _bucket_layout(self.spark):
+            delta_rows.repartition(self.n_buckets, *KEY_COLS).write.option(
+                "compression", PARQUET_CODEC
+            ).mode("overwrite").parquet(out_path)
         deltas = base_meta.get("deltas", []) + [delta_dir]
         self._commit(
             version, evolved, base_meta["data_dir"], offsets,
@@ -872,14 +884,15 @@ class TargetTable:
         # groups instead of scanning the bucket (delta writes stay
         # UNSORTED — the hot path pays no sort; sorting is amortized
         # into maintenance, the Iceberg rewrite-with-sort-order pattern)
-        resolved.repartition(self.n_buckets, *KEY_COLS).sortWithinPartitions(
-            *KEY_COLS
-        ).write.option(
-            "compression", PARQUET_CODEC
-        ).mode("overwrite").parquet(
-            out_path
-        )
-        row_count = self._observed_live(obs, out_path)
+        with _bucket_layout(self.spark):
+            resolved.repartition(self.n_buckets, *KEY_COLS).sortWithinPartitions(
+                *KEY_COLS
+            ).write.option(
+                "compression", PARQUET_CODEC
+            ).mode("overwrite").parquet(
+                out_path
+            )
+        row_count = self._observed_live(obs, schema, data_dir)
         self._commit(
             version, schema, data_dir, meta.get("offsets", {}),
             row_count=row_count, parent=version - 1,
@@ -887,7 +900,7 @@ class TargetTable:
         return {"version": version, "row_count": row_count, "data_dir": data_dir,
                 "n_deltas": 0}
 
-    def _observed_live(self, obs, out_path: str) -> int:
+    def _observed_live(self, obs, schema: T.StructType, data_dir: str) -> int:
         """Live-row count from the write's Observation, with a fallback:
         when the written plan is EMPTY, AQE propagates the empty
         relation through the sort and eliminates the CollectMetrics
@@ -897,18 +910,31 @@ class TargetTable:
         try:
             return int(obs.get["live"] or 0)
         except Exception:
-            out = self.spark.read.parquet(out_path)
+            out = self._scan(schema, [data_dir])
             return out.filter(
                 ~F.coalesce(F.col(META_DELETED), F.lit(False))
             ).count()
 
     def count_live(self) -> int:
         """Exact live-row count: committed metadata right after a
-        compaction, a winner-resolution scan while deltas are pending."""
-        rc = self.metadata().get("row_count")
-        if rc is None:
-            return self.read().count()
-        return rc
+        compaction; with deltas pending, a key-only resolution — the
+        same schema-pinned scan as :meth:`read`, but reading only the
+        key and meta columns and counting keys whose
+        ``max_by(_deleted, _lsn)`` is not true (a hash aggregate with a
+        map-side combine, no payload, no sort window)."""
+        meta = self.metadata()
+        if meta.get("row_count") is not None:
+            return meta["row_count"]
+        want = T.StructType.fromJson(meta["schema"])
+        keys = self._scan(want, [meta["data_dir"], *meta.get("deltas", [])])
+        dead = F.max_by(META_DELETED, META_LSN)
+        return (
+            keys.select(*KEY_COLS, *META_COLS)
+            .groupBy(*KEY_COLS)
+            .agg(dead.alias(META_DELETED))
+            .filter(~F.coalesce(F.col(META_DELETED), F.lit(False)))
+            .count()
+        )
 
     # ----------------------------------------------------------- commit
     def _conflict_if_published(
